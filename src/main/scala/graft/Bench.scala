@@ -175,26 +175,9 @@ object Bench {
         java.nio.file.Files.createTempDirectory(shm, s"bench-idx-$cpus")
       else java.nio.file.Files.createTempDirectory(s"bench-idx-$cpus")).toString
       cleanupDir = outDir
-      val profile = sys.env.get("SPARK_GRAFT_PROFILE").contains("1")
-      def lap(tag: String, t: Long): Long = {
-        val now = System.nanoTime()
-        if (profile) System.err.println(f"[profile cpus=$cpus] $tag ${(now - t) / 1e9}%.2fs")
-        now
-      }
       val t0 = System.nanoTime()
-      var t = t0
-      val idx = if (profile) {
-        val withSha = corpus.withColumn("content_sha256", org.apache.spark.sql.functions.sha2(org.apache.spark.sql.functions.col("content"), 256))
-        val docs = IndexBuilder.assignDocIdsScalable(withSha, Seq("repo", "path", "commit"))
-        docs.count(); t = lap("docIds", t)
-        val i = IndexBuilder.build(docs.select("docId", "content"), cfg)
-        i.postings.count(); t = lap("postings", t)
-        i.dictionary.count(); t = lap("dictionary", t)
-        t = lap("noop", t)
-        i
-      } else IndexBuilder.buildFromCorpus(corpus, cfg)
+      val idx = IndexBuilder.buildFromCorpus(corpus, cfg)
       SegmentStore.writeAll(idx, outDir, cfg) // forces full build
-      t = lap("writeAll", t)
       val buildSec = (System.nanoTime() - t0) / 1e9
       val postings = idx.postings.count()
 

@@ -214,8 +214,9 @@ object BenchExtra {
           // large-star/small-star materialization lab (guide §1.4):
           // round-5 shape (eager ls checkpoint + eager ss checkpoint +
           // separate signature collect, double small-star join) vs the
-          // fused shape (lazy ls persist, single small-star join +
-          // explode, signature via Observation on the ss checkpoint).
+          // fused shape (single small-star join + explode, signature via
+          // Observation on the ss checkpoint; both keep the eager ls
+          // checkpoint).
           // Pair set shaped like LSH candidate output: ~40% of nodes in
           // planted 4-cliques' star edges plus one 64-node chain (forces
           // multi-round convergence), at the 200k fixture scale and a
@@ -231,8 +232,10 @@ object BenchExtra {
               .select(col("id").as("a"), (col("id") + 1).as("b"))
             val pairs = clustered.union(chain).persist()
             nodes.count(); pairs.count()
-            // untimed JIT warmup per scale
-            TextPipeline.connectedComponentsStar(nodes, "id", pairs, 50, fused = true).count()
+            // untimed JIT warmup per scale, of both strategies
+            Seq(false, true).foreach { f =>
+              TextPipeline.connectedComponentsStar(nodes, "id", pairs, 50, fused = f).count()
+            }
             val rows = Seq(("r5_eager", false), ("fused", true)).map { case (tag, f) =>
               val ts = (1 to reps).map { _ =>
                 val t0 = System.nanoTime()

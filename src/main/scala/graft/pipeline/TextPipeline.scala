@@ -225,10 +225,10 @@ object TextPipeline {
     */
   def connectedComponentsStar(nodes: DataFrame, idCol: String, pairs: DataFrame,
                               maxIter: Int = 50): DataFrame =
-    // fused signature + lazy large-star + single small-star join: the
-    // combination the cc-lab measured fastest (bench/r6_cc_lab.json) —
-    // 2 eager materializations + 1 collect per round shrink to 1 eager
-    // materialization whose pass also carries the convergence signature
+    // single small-star join + observe-carried convergence signature:
+    // the combination the cc-lab measured fastest (bench/r6_cc_lab.json)
+    // — both star sets keep their eager per-round checkpoint, and the
+    // separate signature collect per round is gone
     connectedComponentsStar(nodes, idCol, pairs, maxIter, fused = true)
 
   /** [[connectedComponentsStar]] with the per-round materialization

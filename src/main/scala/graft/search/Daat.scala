@@ -2,6 +2,7 @@ package graft.search
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 import graft.index.{BlockCodec, InvertedIndex}
 
@@ -236,12 +237,13 @@ object Daat {
     * matches per doc — (occ, df) per window, summed across buckets
     * (docId ranges are disjoint). Bit-count-identical to the DataFrame
     * windowRaw aggregation (same positions, same matcher).
-    * (reference: src/ContextCountAccumulator.cpp gathered in one
-    * server round, src/QueryEnvironment.cpp:957-966)
+    * Returns the lazy (i: Int, occ: Double, df: Long) aggregate, one
+    * row per window index, so the caller can collect it together with
+    * other stats aggregates (reference: src/ContextCountAccumulator.cpp
+    * gathered in one server round, src/QueryEnvironment.cpp:957-966).
     */
   def windowStats(index: InvertedIndex, windows: Array[WindowSpec],
-                  deleted: Set[Long] = Set.empty): Array[(Double, Long)] = {
-    if (windows.isEmpty) return Array.empty
+                  deleted: Set[Long] = Set.empty): DataFrame = {
     val spark = index.segments.sparkSession
     import spark.implicits._
     val termSet = windows.flatMap(_.terms).distinct.toSeq
@@ -250,7 +252,7 @@ object Daat {
 
     val segs = querySegments(index, termSet, withPositions = true)
 
-    val partials = segs.mapPartitions { rows =>
+    segs.mapPartitions { rows =>
       val ws = bcWindows.value
       val del = bcDeleted.value
       val byTerm = collectBlocks(rows, hasPositions = true)
@@ -269,13 +271,8 @@ object Daat {
         }
         (wi, occ, df)
       }
-    }.toDF("wi", "occ", "df")
-      .groupBy("wi").agg(sum("occ").as("occ"), sum("df").as("df"))
-      .collect()
-
-    val out = Array.fill(windows.length)((0.0, 0L))
-    partials.foreach { r => out(r.getInt(0)) = (r.getLong(1).toDouble, r.getLong(2)) }
-    out
+    }.toDF("i", "occ", "df")
+      .groupBy("i").agg(sum("occ").cast(DoubleType).as("occ"), sum("df").as("df"))
   }
 
   private def statsPlan(t: String) = TermPlan(t, null, 0.0, 0.0)

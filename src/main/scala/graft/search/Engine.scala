@@ -923,27 +923,40 @@ final class Engine(
         count(lit(1)).as("df"))
   }
 
-  /** One-job stats round for every complex raw leaf of the query. Each
-    * leaf keeps its own 1-row aggregate subtree (bit-identical values to
-    * the per-leaf form); the union is collected ONCE — the reference
-    * gathers all ContextCount requests in a single network round the
-    * same way (src/QueryEnvironment.cpp:957-966 — ContextCountGraphCopier
+  /** One-job stats round for every complex raw leaf of the query — the
+    * reference gathers all ContextCount requests in a single network
+    * round (src/QueryEnvironment.cpp:957-966 — ContextCountGraphCopier
     * over ALL scorer nodes, one _sumServerQuery), where the naive form
     * pays one blocking Spark job per complex leaf.
     */
   private def complexStatsFor(node: QueryNode): Map[QueryNode, (Double, Long)] =
     complexStatsBatch(complexRawLeaves(node))
 
-  /** the same one-job round over an arbitrary set of complex leaves —
-    * lets a query BATCH share a single stats job (runQueries)
+  /** the same one-job round over an arbitrary set of complex leaves */
+  private def complexStatsBatch(leaves: Seq[QueryNode]): Map[QueryNode, (Double, Long)] =
+    leafStatsRound(leaves, Nil)._1
+
+  /** The one leaf-stats job: each complex leaf keeps its own 1-row
+    * (occ, df) aggregate subtree, and structured kernel windows add the
+    * kernel window pass's per-window aggregate (Daat.windowStats); the
+    * union is collected ONCE. Windows get their values only from the
+    * kernel pass.
     */
-  private def complexStatsBatch(leaves0: Seq[QueryNode]): Map[QueryNode, (Double, Long)] = {
+  private def leafStatsRound(leaves0: Seq[QueryNode], windows0: Seq[Daat.WindowSpec])
+      : (Map[QueryNode, (Double, Long)], Map[Daat.WindowSpec, (Double, Long)]) = {
     val leaves = leaves0.distinct
-    if (leaves.isEmpty) return Map.empty
-    val rows = leaves.zipWithIndex.map { case (n, i) =>
+    val windows = windows0.distinct.toArray
+    val frames = leaves.zipWithIndex.map { case (n, i) =>
       statsAgg(n).select(lit(i).as("i"), col("occ"), col("df"))
-    }.reduce(_ union _).collect()
-    rows.map(r => leaves(r.getInt(0)) -> (r.getDouble(1), r.getLong(2))).toMap
+    } ++ (if (windows.isEmpty) Nil else Seq(
+      Daat.windowStats(index, windows, kernelDeletes)
+        .select((col("i") + leaves.length).as("i"), col("occ"), col("df"))))
+    if (frames.isEmpty) return (Map.empty, Map.empty)
+    val rows = frames.reduce(_ union _).collect()
+      .map(r => r.getInt(0) -> (r.getDouble(1), r.getLong(2))).toMap
+    // a window no bucket reported never matched
+    (rows.collect { case (i, v) if i < leaves.length => leaves(i) -> v },
+      windows.indices.map(i => windows(i) -> rows.getOrElse(leaves.length + i, (0.0, 0L))).toMap)
   }
 
   private def isRawNode(n: QueryNode): Boolean = n match {
@@ -1313,147 +1326,87 @@ final class Engine(
   // QueryEnvironment verbs
   // ------------------------------------------------------------------
 
-  /** Top-k retrieval. Final order: score desc, docId asc — the stable
-    * sort + doc-order tiebreak (reference: src/QueryEnvironment.cpp:985-988).
-    *
-    * Flat okapi/tfidf bags with non-negative weights dispatch to the
-    * block-max WAND DAAT kernel over the compressed segments (the
-    * max-score physical path); everything else evaluates on the
-    * DataFrame inference-network path. Both produce bit-identical
-    * scores (WandPropertySpec).
+  /** Top-k retrieval — a one-query [[runQueries]]. Final order: score
+    * desc, docId asc — the stable sort + doc-order tiebreak (reference:
+    * src/QueryEnvironment.cpp:985-988).
     */
   def runQuery(query: String, k: Int, useDaat: Boolean = true): DataFrame =
-    runParsed(QueryParser.parse(query), k, useDaat)
+    dispatch(Seq(QueryParser.parse(query)), k, useDaat).head
 
-  /** AST-level entry — callers that BUILD nodes (the NEXI CO path) must
-    * not round-trip through query-string rendering: a term like
-    * 'node.js' would re-lex with indri DOT-qualifier semantics.
+  /** Batch retrieval through the one query dispatch (reference: a lone
+    * query and IndriRunQuery's query batches share one QueryEnvironment
+    * path, runquery/IndriRunQuery.cpp:710-726). Each query takes one of
+    * three physical paths:
+    *  - flat non-negative term bags under a single okapi/tfidf/LM rule:
+    *    the block-max WAND bag kernel over the compressed segments;
+    *  - #combine/#weight trees over terms and #odN/#uwN windows (the
+    *    SDM/FDM shape): the structured window-aware kernel;
+    *  - everything else, selector rule lists, and `useDaat = false`:
+    *    the DataFrame inference-network (belief) path.
+    * All paths give bit-identical scores (WandPropertySpec). The whole
+    * call pays ONE dictionary probe and at most ONE leaf-stats job (the
+    * belief leaves' aggregates and the kernel window pass, collected
+    * together), plus the k-bounded topdocs seed probe per bag-kernel
+    * query; on Spark these driver-blocking rounds are the per-query
+    * latency floor. Per-query results equal runQuery's.
     */
-  private[graft] def runParsed(ast: QueryNode, k: Int,
-                               useDaat: Boolean = true): DataFrame = {
-    // selector rule lists can give different leaves different smoothing,
-    // which the single-rule kernels cannot represent — belief path then
-    daatBag(ast) match {
-      case Some(termWeights) if useDaat && baseline &&
-          smoothRules.isEmpty && daatDeletedSet.isDefined =>
-        runDaat(termWeights, k, exhaustive = false)
-      case Some(_) if useDaat && lmMethod &&
-          smoothRules.isEmpty && daatDeletedSet.isDefined =>
-        // flat LM bags run the kernel too — weights become the belief
-        // weights evaluate() would use (combine: 1/k; weight: w/Σ|w|)
-        runDaatLm(lmBagWeights(ast).get, k, exhaustive = false)
-      case _ =>
-        (if (useDaat) runStructured(ast, k) else None)
-          .getOrElse(scoredTail(evaluate(ast), k))
+  def runQueries(queries: Seq[String], k: Int, useDaat: Boolean = true): Seq[(String, DataFrame)] =
+    queries.zip(dispatch(queries.map(QueryParser.parse), k, useDaat))
+
+  /** one query's physical path (see [[runQueries]]) */
+  private sealed trait Route
+  private final case class BagRoute(termWeights: Seq[(String, Double)]) extends Route
+  private final case class StructuredRoute(plan: StructuredLeaves) extends Route
+  private final case class BeliefRoute(ast: QueryNode) extends Route
+
+  /** the kernel-eligibility guard: selector rule lists can give different
+    * leaves different smoothing, which the single-rule kernels cannot
+    * represent; unbounded pending deletes defer to the anti-join path
+    */
+  private def route(ast: QueryNode, useDaat: Boolean): Route =
+    if (!(useDaat && (baseline || lmMethod) && smoothRules.isEmpty && daatDeletedSet.isDefined))
+      BeliefRoute(ast)
+    else daatBag(ast).map(BagRoute)
+      .orElse(planStructured(ast).map(StructuredRoute))
+      .getOrElse(BeliefRoute(ast))
+
+  /** The one query dispatch. AST-level, so callers that BUILD nodes (the
+    * NEXI CO path) do not round-trip through query-string rendering: a
+    * term like 'node.js' would re-lex with indri DOT-qualifier semantics.
+    */
+  private def dispatch(asts: Seq[QueryNode], k: Int, useDaat: Boolean,
+                       exhaustive: Boolean = false): Seq[DataFrame] = {
+    val routes = asts.map(route(_, useDaat))
+    val tstats = termStatsFor(asts.flatMap(QueryParser.termLeaves)
+      .flatMap(t => Option(analyzer.processTerm(t))).distinct)
+    val (cstats, wstats) = leafStatsRound(
+      routes.collect { case BeliefRoute(a) => complexRawLeaves(a) }.flatten,
+      routes.collect { case StructuredRoute(s) => s.windows }.flatten)
+    routes.map {
+      case BagRoute(termWeights) if baseline =>
+        runDaat(termWeights, k, exhaustive, tstatsOpt = Some(tstats))
+      case BagRoute(termWeights) =>
+        // the belief weights evaluate() folds for a non-baseline root:
+        // #combine → 1/n, #weight → w/Σw (the bag's weights are ≥ 0)
+        val total = termWeights.map(_._2).sum
+        runDaatLm(termWeights.map { case (t, w) => t -> w / total }, k, exhaustive,
+          tstatsOpt = Some(tstats))
+      case StructuredRoute(plan) => runStructuredPlan(plan, k, exhaustive, tstats, wstats)
+      case BeliefRoute(ast) => scoredTail(evaluateWith(ast, tstats, cstats, root = true), k)
     }
   }
 
   private def lmMethod: Boolean =
     rule.method == "dirichlet" || rule.method == "jm" || rule.method == "two"
 
-  /** flat-bag CHILD weights exactly as evaluateWith folds them for a
-    * non-baseline root: #combine → 1/k each; #weight → w/Σ|w| (positive
-    * weights only — the daatBag guard); bare term → weight 1
-    */
-  private def lmBagWeights(ast: QueryNode): Option[Seq[(String, Double)]] = ast match {
-    case TermNode(t) => Some(Seq(t -> 1.0))
-    case CombineNode(cs) if cs.forall(_.isInstanceOf[TermNode]) =>
-      Some(cs.map { case TermNode(t) => t -> 1.0 / cs.size })
-    case WeightNode(cs) if cs.forall(_._2.isInstanceOf[TermNode]) && cs.forall(_._1 >= 0) =>
-      val total = cs.map(c => math.abs(c._1)).sum
-      Some(cs.map { case (w, TermNode(t)) => t -> w / total })
-    case _ => None
-  }
-
   /** deleted-doc filter + final (score desc, docId asc) top-k on a
-    * belief — the shared tail of runQuery and runQueries
+    * belief — the belief path's tail
     */
-  private def scoredTail(belief: Belief, k: Int): DataFrame = {
-    val scored = deletedDocs match {
-      case Some(d) => belief.df.join(d, Seq("docId"), "left_anti")
-      case None => belief.df
-    }
-    scored
+  private def scoredTail(belief: Belief, k: Int): DataFrame =
+    notDeleted(belief.df)
       .select(col("docId"), col("score"))
       .orderBy(col("score").desc, col("docId").asc)
       .limit(k)
-  }
-
-  /** Batch retrieval: the whole batch shares ONE dictionary stats probe
-    * and ONE complex-leaf stats job, then each query's top-k evaluates
-    * independently — per-query results are identical to runQuery
-    * (reference: IndriRunQuery drives query batches against a shared
-    * QueryEnvironment, runquery/IndriRunQuery.cpp:710-726). On Spark the
-    * driver-blocking stats rounds are the per-query latency floor, so a
-    * B-query batch pays 2 rounds instead of 2B (plus the k-bounded
-    * topdocs seed probe per DAAT-path query).
-    */
-  def runQueries(queries: Seq[String], k: Int, useDaat: Boolean = true): Seq[(String, DataFrame)] = {
-    val asts = queries.map(q => q -> QueryParser.parse(q))
-    def daatPath(ast: QueryNode): Boolean =
-      daatBag(ast).isDefined && useDaat && (baseline || lmMethod) && daatDeletedSet.isDefined
-    def structPath(ast: QueryNode): Boolean =
-      daatBag(ast).isEmpty && useDaat && structuredServes(ast)
-    val allTerms = asts.flatMap { case (_, a) => QueryParser.termLeaves(a) }
-      .flatMap(t => Option(analyzer.processTerm(t)))
-    val tstats = termStatsFor(allTerms.distinct)
-    // structured (windows-in-kernel) queries fold their window-leaf
-    // stats into the SAME one-job round as the belief leaves — the batch
-    // still pays exactly two driver actions (term probe + leaf stats).
-    // Window counts are exact integers through either counting path, so
-    // the shared values are bit-identical to a kernel windowStats pass;
-    // with pending deletes the kernel pass (delete-aware) runs instead.
-    val noDeletes = daatDeletedSet.contains(Set.empty[Long])
-    val structLeaves: Seq[QueryNode] =
-      if (noDeletes)
-        asts.collect { case (_, a) if structPath(a) => structuredWindowNodes(a) }.flatten
-      else Nil
-    val cstats = complexStatsBatch(
-      asts.collect { case (_, a) if !daatPath(a) && !structPath(a) =>
-        complexRawLeaves(a) }.flatten ++ structLeaves)
-    val wShared: Map[(Seq[String], Boolean, Int), (Double, Long)] =
-      structLeaves.distinct.flatMap { n =>
-        windowSpecKey(n).map(_ -> cstats(n))
-      }.toMap
-    asts.map { case (q, ast) =>
-      q -> (daatBag(ast) match {
-        case Some(termWeights) if daatPath(ast) && baseline =>
-          runDaat(termWeights, k, exhaustive = false, tstatsOpt = Some(tstats))
-        case Some(_) if daatPath(ast) =>
-          runDaatLm(lmBagWeights(ast).get, k, exhaustive = false,
-            tstatsOpt = Some(tstats))
-        case _ =>
-          (if (structPath(ast)) runStructured(ast, k, tstatsOpt = Some(tstats),
-             wstatsOpt = if (wShared.isEmpty) None else Some(wShared))
-           else None)
-            .getOrElse(scoredTail(evaluateWith(ast, tstats, cstats, root = true), k))
-      })
-    }
-  }
-
-  /** window leaf nodes of a structured AST (the shapes structuredShape
-    * admits), for the shared batch stats round
-    */
-  private def structuredWindowNodes(n: QueryNode): Seq[QueryNode] = n match {
-    case w: OdNode => Seq(w)
-    case w: UwNode => Seq(w)
-    case CombineNode(cs) => cs.flatMap(structuredWindowNodes)
-    case WeightNode(cs) => cs.flatMap(c => structuredWindowNodes(c._2))
-    case _ => Nil
-  }
-
-  /** canonical (processed members, ordered, width) key for a window
-    * node — the lookup runStructured uses against the shared stats map
-    */
-  private def windowSpecKey(n: QueryNode): Option[(Seq[String], Boolean, Int)] = n match {
-    case OdNode(w, cs) if cs.forall(_.isInstanceOf[TermNode]) =>
-      Some((cs.map { case TermNode(t) =>
-        Option(analyzer.processTerm(t)).getOrElse(StoppedSentinel) }, true, w))
-    case UwNode(w, cs) if cs.forall(_.isInstanceOf[TermNode]) =>
-      Some((cs.map { case TermNode(t) =>
-        Option(analyzer.processTerm(t)).getOrElse(StoppedSentinel) }, false, w))
-    case _ => None
-  }
 
   /** (rawTerm, weight) children in query order when the AST is a flat
     * non-negative bag the WAND kernel can serve; None otherwise.
@@ -1469,6 +1422,23 @@ final class Engine(
     case _ => None
   }
 
+  /** empty (docId, score) result of the kernel paths */
+  private def noScores: DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      StructType(Seq(StructField("docId", LongType), StructField("score", DoubleType))))
+
+  /** the pending-delete set the kernel paths consult */
+  private def kernelDeletes: Set[Long] = daatDeletedSet.getOrElse(
+    throw new IllegalStateException("DAAT with unbounded pending deletes — compact first"))
+
+  /** the bag kernels' tail: topdocs seed, then distributed WAND */
+  private def bagTopK(p: Daat.DaatPlan, k: Int, exhaustive: Boolean): DataFrame = {
+    val del = kernelDeletes
+    val seed = if (exhaustive || index.topdocs == null) Double.NegativeInfinity
+               else topdocsSeed(p, k, del)
+    Daat.topK(index, p, k, exhaustive, seed, del)
+  }
+
   /** Score a bag through the DAAT/WAND kernel. Stopped/OOV terms drop
     * out (okapi background = 0 — NullScorerNode semantics).
     */
@@ -1477,10 +1447,7 @@ final class Engine(
     val processed = termWeights.flatMap { case (t, w) =>
       Option(analyzer.processTerm(t)).map(_ -> w)
     }
-    if (processed.isEmpty) {
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("docId", LongType), StructField("score", DoubleType))))
-    }
+    if (processed.isEmpty) return noScores
     val tstats = tstatsOpt.getOrElse(termStatsFor(processed.map(_._1)))
     val qtfs = processed.groupBy(_._1).map { case (t, xs) => t -> xs.length }
     val engineTerms = processed.map { case (t, w) =>
@@ -1489,12 +1456,7 @@ final class Engine(
         ts.df.toDouble, stats.totalDocs, qtf = qtfs(t))
       (t, w, fn)
     }
-    val p = Daat.plan(engineTerms)
-    val del = daatDeletedSet.getOrElse(
-      throw new IllegalStateException("DAAT with unbounded pending deletes — compact first"))
-    val seed = if (exhaustive || index.topdocs == null) Double.NegativeInfinity
-               else topdocsSeed(p, k, del)
-    Daat.topK(index, p, k, exhaustive, seed, del)
+    bagTopK(Daat.plan(engineTerms), k, exhaustive)
   }
 
   /** LM bag through the kernel. Unlike the baseline path, stopped/OOV
@@ -1509,10 +1471,7 @@ final class Engine(
       Option(analyzer.processTerm(t)).getOrElse(s"\u0000stopped$i")
     }
     val live = processedNames.filterNot(_.startsWith("\u0000"))
-    if (live.isEmpty) {
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("docId", LongType), StructField("score", DoubleType))))
-    }
+    if (live.isEmpty) return noScores
     val tstats = tstatsOpt.getOrElse(termStatsFor(live))
     val engineTerms = bag.zip(processedNames).map { case ((_, w), name) =>
       val ts = tstats.getOrElse(name, TermStats(0, 0))
@@ -1524,16 +1483,8 @@ final class Engine(
     // per-term minimum doc lengths — the background-sum bound's argument
     val minDlQuery = engineTerms.collect { case (_, _, _, ctf, m) if ctf > 0 => m }
       .reduceOption(math.min).getOrElse(1)
-    if (engineTerms.forall(_._4 == 0L)) {
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("docId", LongType), StructField("score", DoubleType))))
-    }
-    val p = Daat.planLm(engineTerms, minDlQuery)
-    val del = daatDeletedSet.getOrElse(
-      throw new IllegalStateException("DAAT with unbounded pending deletes — compact first"))
-    val seed = if (exhaustive || index.topdocs == null) Double.NegativeInfinity
-               else topdocsSeed(p, k, del)
-    Daat.topK(index, p, k, exhaustive, seed, del)
+    if (engineTerms.forall(_._4 == 0L)) return noScores
+    bagTopK(Daat.planLm(engineTerms, minDlQuery), k, exhaustive)
   }
 
   // ------------------------------------------------------------------
@@ -1564,43 +1515,30 @@ final class Engine(
     case _ => false
   }
 
-  /** dispatch predicate shared by runQuery/runQueries */
-  private def structuredServes(ast: QueryNode): Boolean =
-    (baseline || lmMethod) && daatDeletedSet.isDefined &&
-      // selector rules force the belief path — checked HERE so that
-      // runQueries' batched complex-leaf stats round still covers a
-      // structured-shaped query's window leaves (runStructured would
-      // decline later and the belief fallback would otherwise pay one
-      // blocking stats job per window leaf)
-      smoothRules.isEmpty &&
-      structuredShape(ast) && containsWindow(ast)
-
   private sealed trait LeafMeta
   private final case class TermLeafM(processed: String, qtf: Int) extends LeafMeta
   private final case class WinLeafM(spec: Daat.WindowSpec) extends LeafMeta
 
-  /** Build and run the structured WAND plan, or None when the shape is
-    * not kernel-servable. Mirrors evaluateWith EXACTLY: per-level
-    * weights (root-vs-inner, baseline-vs-LM), per-level okapi qtf maps,
-    * background fill-in, nested left-to-right folds — bit-identical
-    * scores (WandPropertySpec structured cases).
+  /** A structured query's kernel leaves (deduplicated by identical
+    * semantics) and the fold tree over them.
     */
-  private[graft] def runStructured(ast: QueryNode, k: Int,
-                                   exhaustive: Boolean = false,
-                                   tstatsOpt: Option[Map[String, TermStats]] = None,
-                                   wstatsOpt: Option[Map[(Seq[String], Boolean, Int), (Double, Long)]] = None): Option[DataFrame] = {
-    if (!structuredServes(ast)) return None
-    if (smoothRules.nonEmpty) return None // per-leaf rules → belief path
-    val del = daatDeletedSet.get
+  private final case class StructuredLeaves(tree: Daat.FoldTree, metas: Array[LeafMeta]) {
+    def windows: Seq[Daat.WindowSpec] = metas.toSeq.collect { case WinLeafM(s) => s }
+  }
 
-    // ---- leaf registry (dedup by identical semantics) ----
+  /** Plan step of the structured path: the leaf registry, or None when
+    * the shape is not kernel-servable. Mirrors evaluateWith EXACTLY:
+    * per-level weights (root-vs-inner, baseline-vs-LM), per-level okapi
+    * qtf maps, nested left-to-right folds.
+    */
+  private def planStructured(ast: QueryNode): Option[StructuredLeaves] = {
+    if (!(structuredShape(ast) && containsWindow(ast))) return None
     val leafIdx = scala.collection.mutable.LinkedHashMap.empty[(String, Seq[String], Int, Int), Int]
     val leafMeta = scala.collection.mutable.ArrayBuffer.empty[LeafMeta]
-    val Sentinel = StoppedSentinel
 
     def termLeaf(raw: String, qtfs: Map[String, Int]): Daat.FoldTree = {
       val pt = analyzer.processTerm(raw)
-      val processed = if (pt == null) Sentinel else pt
+      val processed = if (pt == null) StoppedSentinel else pt
       // evaluateWith: baseline terms score with the ENCLOSING level's
       // qtf; LM terms go through scoreRaw's default qtf = 1
       val qtf = if (baseline && pt != null) qtfs.getOrElse(pt, 1) else 1
@@ -1611,7 +1549,7 @@ final class Engine(
     }
     def windowLeaf(ordered: Boolean, width: Int, cs: Seq[QueryNode]): Daat.FoldTree = {
       val members = cs.map { case TermNode(t) =>
-        Option(analyzer.processTerm(t)).getOrElse(Sentinel)
+        Option(analyzer.processTerm(t)).getOrElse(StoppedSentinel)
       }
       val key = (if (ordered) "od" else "uw", members, width, 0)
       Daat.FLeaf(leafIdx.getOrElseUpdate(key, {
@@ -1644,23 +1582,29 @@ final class Engine(
     }
 
     val tree = walk(ast, root = true)
-    val metas = leafMeta.toArray
+    Some(StructuredLeaves(tree, leafMeta.toArray))
+  }
 
-    // ---- stats rounds: dictionary probe + ONE kernel window pass ----
-    val realTerms = metas.flatMap {
-      case TermLeafM(p, _) if p != Sentinel => Seq(p)
-      case WinLeafM(spec) => spec.terms.filterNot(_ == Sentinel).toSeq
-      case _ => Nil
-    }.distinct.toSeq
-    val tstats = tstatsOpt.getOrElse(termStatsFor(realTerms))
-    val windows = metas.collect { case WinLeafM(s) => s }
-    // answered from the batch-shared stats round when every window is
-    // covered (runQueries); otherwise one kernel windowStats pass
-    val wstats: Array[(Double, Long)] = wstatsOpt match {
-      case Some(m) if windows.forall(w => m.contains((w.terms.toSeq, w.ordered, w.width))) =>
-        windows.map(w => m((w.terms.toSeq, w.ordered, w.width)))
-      case _ => Daat.windowStats(index, windows, del)
+  /** Single-query entry to the structured kernel path: its top-k when
+    * the dispatch routes `ast` there, None otherwise.
+    */
+  private[graft] def runStructured(ast: QueryNode, k: Int,
+                                   exhaustive: Boolean = false): Option[DataFrame] =
+    route(ast, useDaat = true) match {
+      case _: StructuredRoute => Some(dispatch(Seq(ast), k, useDaat = true, exhaustive).head)
+      case _ => None
     }
+
+  /** Run step of the structured path from the dispatch's stats: term
+    * stats from the dictionary probe, window (occ, df) from the kernel
+    * window pass. Background fill-in and per-leaf bounds mirror the
+    * belief path — bit-identical scores (WandPropertySpec structured
+    * cases).
+    */
+  private def runStructuredPlan(plan: StructuredLeaves, k: Int, exhaustive: Boolean,
+                                tstats: Map[String, TermStats],
+                                wstats: Map[Daat.WindowSpec, (Double, Long)]): DataFrame = {
+    val StructuredLeaves(tree, metas) = plan
 
     // ---- per-leaf score functions, bounds, eff weights ----
     val effW = new Array[Double](metas.length)
@@ -1670,7 +1614,6 @@ final class Engine(
     }
     accEff(tree, 1.0)
 
-    var wi = 0
     val leaves = metas.zipWithIndex.map {
       case (TermLeafM(p, qtf), i) =>
         val ts = tstats.getOrElse(p, TermStats(0, 0))
@@ -1683,7 +1626,7 @@ final class Engine(
             fn.scoreOccurrence(ts.ctf.toDouble, minDl) - fn.scoreOccurrence(0.0, minDl), 0.0)
         (Daat.LeafPlan(p, null, fn, effW(i), ub), if (ts.ctf > 0) minDl else 0)
       case (WinLeafM(spec), i) =>
-        val (occ, df) = wstats(wi); wi += 1
+        val (occ, df) = wstats(spec)
         val fn = Scorers.forTerm(rule, occ, stats.totalTerms.toDouble,
           df.toDouble, stats.totalDocs)
         // window matches contain every member: dl ≥ max member minDocLen
@@ -1704,10 +1647,7 @@ final class Engine(
     // every candidate matches ≥1 live leaf — its dl is ≥ the min of the
     // live leaves' minimum context lengths (the baseMax argument)
     val liveMinDls = leaves.collect { case (_, m) if m > 0 => m }
-    if (liveMinDls.isEmpty) {
-      return Some(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("docId", LongType), StructField("score", DoubleType)))))
-    }
+    if (liveMinDls.isEmpty) return noScores
     val minDlQuery = liveMinDls.min
     val leafPlans = leaves.map(_._1)
     val baseMax =
@@ -1722,7 +1662,7 @@ final class Engine(
       })
 
     val p = Daat.StructuredPlan(leafPlans, tree, lm = lmMethod, baseMax = baseMax)
-    Some(Daat.topKStructured(index, p, k, exhaustive, del))
+    Daat.topKStructured(index, p, k, exhaustive, kernelDeletes)
   }
 
   /** WAND threshold seeding from the topdocs lists (reference:
@@ -2271,7 +2211,7 @@ final class Engine(
       val ast = CombineNode(flat.map(toNode))
       return workingSet match {
         case Some(ws) => runParsedWs(ast, k, ws)
-        case None => runParsed(ast, k)
+        case None => dispatch(Seq(ast), k, useDaat = true).head
       }
     }
     require(!baseline, "NEXI CAS scoring uses extent contexts — rejected in " +

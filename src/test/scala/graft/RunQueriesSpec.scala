@@ -54,6 +54,28 @@ class RunQueriesSpec extends AnyFunSuite {
     }
   }
 
+  test("selector rule lists send flat bags to the belief path in a batch too") {
+    val eng = new Engine(spark, index, cfg.analyzer, ScoringRule(method = "dirichlet"))
+    eng.setScoringRules(Seq("operator:term,method:dirichlet,mu:1000"))
+    val bags = Seq("#combine(alpha beta)", "alpha beta")
+    val batch = collectAll(eng.runQueries(bags, 10))
+    bags.foreach { q =>
+      val single = eng.runQuery(q, 10).select("docId", "score").as[(Long, Double)].collect().toSeq
+      assert(batch(q) == single, s"mismatch for $q")
+    }
+  }
+
+  /** waits until the listener's action count stops moving */
+  private def settle(actions: AtomicInteger): Unit = {
+    var last = -1; var stable = 0
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (stable < 5 && System.nanoTime() < deadline) {
+      Thread.sleep(100)
+      val v = actions.get()
+      if (v == last) stable += 1 else { stable = 0; last = v }
+    }
+  }
+
   test("an all-belief-path batch pays exactly 2 driver actions to construct") {
     val eng = new Engine(spark, index, cfg.analyzer, ScoringRule(method = "dirichlet"))
     eng.runQueries(mixed, 10).foreach(_._2.collect()) // warm
@@ -67,15 +89,20 @@ class RunQueriesSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(listener)
     try {
       eng.runQueries(mixed, 10) // construction only
-      var last = -1; var stable = 0
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (stable < 5 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val v = actions.get()
-        if (v == last) stable += 1 else { stable = 0; last = v }
-      }
+      settle(actions)
       assert(actions.get() == 2,
         s"expected 2 actions for a ${mixed.size}-query batch (shared term stats + shared leaf stats), saw ${actions.get()}")
+      // structured-only: the term probe + ONE kernel window pass
+      val structured = Seq(
+        "#combine(alpha beta #od1(alpha beta) #uw8(alpha beta))",
+        "#combine(gamma delta #od1(gamma delta) #uw8(gamma delta))")
+      eng.runQueries(structured, 10).foreach(_._2.collect()) // warm
+      settle(actions)
+      actions.set(0)
+      eng.runQueries(structured, 10) // construction only
+      settle(actions)
+      assert(actions.get() == 2,
+        s"expected 2 actions for a structured-only batch (term stats + kernel window pass), saw ${actions.get()}")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -137,19 +137,23 @@ class RunQuerySpec extends AnyFunSuite {
     // <rule>: 'operator:window,…' must smooth ONLY window scorers, while
     // term scorers keep the walker's mu-2500 dirichlet default — a
     // selector rule applied globally would shift every term score
-    val q = "#combine(#1(return license) class)"
+    // the flat bag rides the app's batched path with the windowed query
+    val qs = Seq("#combine(#1(return license) class)", "return license")
     val p = RunQuery.Params(indexPaths = Seq("x"),
       rule = Some("operator:window,method:dirichlet,documentMu:3000"),
       rules = Seq("operator:window,method:dirichlet,documentMu:3000"),
-      count = 10, queries = Seq(RunQuery.QuerySpec(None, q)))
+      count = 10, queries = qs.map(RunQuery.QuerySpec(None, _)))
     val eng = RunQuery.environmentFor(spark, idx, p, graft.analysis.Analyzer())
-    val got = RunQuery.execute(eng, p).head._2.collect()
+    val results = RunQuery.execute(eng, p)
     // the explicit selector-list engine is the specification
     val ref = new graft.search.Engine(spark, idx, graft.analysis.Analyzer(),
       graft.search.ScoringRule(method = "dirichlet"))
     ref.setScoringRules(Seq("operator:window,method:dirichlet,documentMu:3000"))
-    val expect = ref.runQuery(q, 10).collect()
-    assert(got.nonEmpty && got.toSeq == expect.toSeq)
+    qs.zip(results).foreach { case (q, (_, df)) =>
+      val got = df.collect()
+      val expect = ref.runQuery(q, 10).collect()
+      assert(got.nonEmpty && got.toSeq == expect.toSeq, s"mismatch for $q")
+    }
     // and a selector-FREE single rule still takes the global fast path
     assert(!RunQuery.hasSelector("method:dirichlet,mu:2500"))
     assert(RunQuery.hasSelector("operator:window,method:dirichlet,documentMu:3000"))

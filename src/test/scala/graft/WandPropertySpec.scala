@@ -144,6 +144,14 @@ class WandPropertySpec extends AnyFunSuite {
       assert(wand == dfp, s"deleted-aware structured WAND != DataFrame for '$q' k=$k")
       assert(wand.forall(_._1 % 5 != 0), s"deleted doc leaked for '$q'")
     }
+    // the batch shares one kernel window pass; it skips deletes too
+    val qs = structuredQueries.take(4)
+    for (k <- Seq(10, 100)) {
+      engine.runQueries(qs, k).foreach { case (q, df) =>
+        val batched = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        assert(batched == run(engine, q, k, "wand"), s"batched != runQuery for '$q' k=$k")
+      }
+    }
   }
 
   test("deleted documents: kernel skip == anti-join belief path (okapi + dirichlet)") {
